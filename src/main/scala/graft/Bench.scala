@@ -1,416 +1,173 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{col, count, lit}
+
+import java.nio.file.{Files, Paths}
+
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
 
 /** Benchmark main (driver contract): runs every registered query on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line.
   *
-  * Methodology matches BASELINE.md: per query, one untimed warm-up
-  * execution (JIT + codegen + file-footer caches), then the timed run.
-  * One shared SparkSession for the whole suite. TWO TIERS since round
-  * 13 (VERDICT r12 ask #6): headline rows — the compare tool's shared
-  * set plus every new query — keep the warm protocol; the long tail
-  * (tools/bench_tail.txt, the rows the canonical r12 line already
-  * folded into other_sum) runs once, cold, into queries_cold +
-  * other_sum. SPARK_GRAFT_BENCH_FULL=1 restores the exhaustive run.
-  *
-  * The timed action is a noop-sink WRITE, not count(): under count(),
-  * ColumnPruning drops every projected column and EliminateSorts drops
-  * the top-level sort, so projection-heavy queries would be timed as
-  * little more than a scan. The noop sink consumes complete rows —
-  * the measured plan is the same one Verify gates.
+  * Methodology matches BASELINE.md, on the shared graft.Measure core:
+  * JIT preamble, three host-speed probes, then per query one untimed
+  * warm-up (JIT, codegen and file-footer caches) and the timed run(s).
+  * TWO TIERS since round 13 (VERDICT r12 ask #6): headline rows — the
+  * compare tool's shared set plus every new query — keep the warm
+  * protocol; the long tail (tools/bench_tail.txt, the rows the canonical
+  * r12 line already folded into other_sum) runs once, cold, into
+  * queries_cold + other_sum. SPARK_GRAFT_BENCH_FULL=1 restores the
+  * exhaustive run.
   *
   * Optional args: query names to run (default all) — iteration aid;
   * the driver invokes with no args.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Engine.configure(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-bench"),
-      cpus.toInt
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val m = new Measure("bench", defaultCpus = "4", defaultSf = "/root/testdata/sf0.1")
     // bench-only: replay harnesses trim their state-store fixed cost
     // (see QueriesStreaming.benchFast) — Verify never sets this.
     // SPARK_GRAFT_STREAM_FAST=0 is the A/B escape hatch.
     System.setProperty("graft.bench.fast",
       sys.env.getOrElse("SPARK_GRAFT_STREAM_FAST", "1"))
-    // JIT preamble: exercise the scan/agg/join/sort/window code paths a
-    // couple of times so the FIRST queries in the loop aren't taxed for
-    // warming the interpreter/C2 tiers that later queries inherit —
-    // without it, per-query numbers depend on alphabetical position.
-    locally {
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions._
-      val li = Tables.lineitem(spark, sfDir)
-      val o = Tables.orders(spark, sfDir)
-      for (_ <- 1 to 2) {
-        li.filter(col("l_quantity") > 0)
-          .groupBy("l_returnflag").agg(sum("l_quantity"), approx_count_distinct("l_partkey"))
-          .orderBy("l_returnflag")
-          .write.format("noop").mode("overwrite").save()
-        li.join(o, col("l_orderkey") === col("o_orderkey"))
-          .select(col("o_custkey"),
-            row_number().over(Window.partitionBy("o_custkey").orderBy("l_orderkey")).as("rk"))
-          .filter(col("rk") <= 2)
-          .write.format("noop").mode("overwrite").save()
-      }
-      spark.catalog.clearCache()
-    }
-    // Fixed-work machine-speed probe (round-5 ask #5 / round-6 ask #4):
-    // a data-independent, purely codegen'd job — 200M-row range through
-    // two xxhash64 chains into one bit_xor, no fixture I/O, no shuffle —
-    // whose runtime tracks host/JVM throughput, not engine changes.
-    // Per-round totals have swung ±25% on machine phase alone (r4-r6:
-    // 128→108→86 s); dividing any query's time by the same round's
-    // `calibration` separates engine regressions from host noise.
-    // Median of 3 after one warm-up; never folded into other_sum.
-    // Normalization rule documented in BASELINE.md §Calibration.
-    val calibration: Double = {
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        spark.range(0L, 200000000L, 1L, cpus.toInt)
-          .selectExpr("xxhash64(id) AS h")
-          .selectExpr("bit_xor(xxhash64(h)) AS s") // xor: no ANSI overflow
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      once() // warm-up
-      val ts = Seq(once(), once(), once()).sorted
-      System.err.println(f"[bench] calibration median=${ts(1)}%8.3f (${ts.mkString(", ")})")
-      ts(1)
-    }
-    // Second probe, 10× the work in ONE burst (~2 s): the round-8 runs
-    // showed the short probe reading a near-clean phase while every
-    // query ran a uniform ~1.3× slower — sustained background load slips
-    // between 0.2 s bursts. A single long burst samples it. Both ride in
-    // `queries`; the short one keeps its cross-round comparability.
-    val calibrationSustained: Double = {
-      val t0 = System.nanoTime()
-      spark.range(0L, 2000000000L, 1L, cpus.toInt)
-        .selectExpr("xxhash64(id) AS h")
-        .selectExpr("bit_xor(xxhash64(h)) AS s")
-        .write.format("noop").mode("overwrite").save()
-      val t = (System.nanoTime() - t0) / 1e9
-      System.err.println(f"[bench] calibration_sustained=$t%8.3f")
-      t
-    }
-    // Third probe (round 11): a SHUFFLE burst — repartition + aggregate
-    // over 40 M keyed rows, i.e. one full exchange write+read plus the
-    // scheduler round-trips. The r10→r11 compare showed 41 untouched
-    // rows uniformly ~1.3× slower while BOTH compute probes matched
-    // (0.983 vs 0.973): whatever shifted lives in the shuffle/scheduler
-    // path, which no pure-compute probe can see. Recording it makes the
-    // next such cross-round phase shift attributable instead of argued.
-    // Median of 3 after one warm-up, like the short probe.
-    val calibrationShuffle: Double = {
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        spark.range(0L, 40000000L, 1L, cpus.toInt)
-          .selectExpr("id % 4000000 AS k")
-          .repartition(col("k"))
-          .groupBy("k").agg(count(lit(1)).as("n"))
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      once() // warm-up
-      val ts = Seq(once(), once(), once()).sorted
-      System.err.println(f"[bench] calibration_shuffle=${ts(1)}%8.3f (${ts.mkString(", ")})")
-      ts(1)
-    }
+    m.warmJit()
+    val calibration = m.calibration()
+    val calibrationSustained = m.calibrationSustained()
+    val calibrationShuffle = m.calibrationShuffle()
     val selected =
       if (args.isEmpty) SparkEntry.queries.toSeq.sortBy(_._1)
       else SparkEntry.queries.filter(kv => args.contains(kv._1)).toSeq.sortBy(_._1)
-    // TIME-BUDGETED TIER (round 13, VERDICT r12 ask #6): the suite was
-    // measuring ~0.8 s of fixed cost 296 times — 851 s of wall for
-    // 282 s of signal. Rows in tools/bench_tail.txt (exactly the rows
-    // the canonical r12 stdout line already folded into other_sum) run
-    // ONCE, cold, and report under queries_cold + other_sum; headline
-    // rows — the compare tool's shared set PLUS every new query (new
-    // names are never in the committed list) — keep the full
-    // warm-timed protocol, so round-over-round comparisons lose no
-    // coverage. SPARK_GRAFT_BENCH_FULL=1 restores the old exhaustive
-    // run (the A/B escape hatch); explicit query args always run full.
+    // explicit query args always run the full warm protocol
     val tailRows: Set[String] = {
-      val p = java.nio.file.Paths.get("tools/bench_tail.txt")
+      val p = Paths.get("tools/bench_tail.txt")
       if (args.nonEmpty || sys.env.get("SPARK_GRAFT_BENCH_FULL").contains("1") ||
-          !java.nio.file.Files.exists(p)) Set.empty
-      else {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.readAllLines(p).asScala
-          .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#")).toSet
-      }
+          !Files.exists(p)) Set.empty
+      else Files.readAllLines(p).asScala
+        .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#")).toSet
     }
     // SPARK_GRAFT_BENCH_RUNS=N (default 1): timed runs per query, the
-    // MEDIAN reported. The driver's per-round invocation keeps N=1 (its
-    // wall-clock budget); the canonical committed artifact is produced
-    // with N=3 so cross-round compares start from medians, not single
-    // samples (VERDICT r11 ask #2). The JSON records `runs` so a
-    // consumer never has to guess which kind it is reading.
+    // MEDIAN reported. The driver keeps N=1 (its wall-clock budget); the
+    // canonical committed artifact uses N=3. The JSON records `runs`.
     val benchRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "1").toInt
     require(benchRuns >= 1, s"SPARK_GRAFT_BENCH_RUNS must be >= 1, got $benchRuns")
-    val sfShort = new java.io.File(sfDir).getName // "sf0.1"
-    // -----------------------------------------------------------------
-    // SELF-ADJUDICATING READINGS (round 15, VERDICT r14 ask #1 — ends
-    // the three-round driver-host anomaly disputes mechanically).
+    val sfShort = new java.io.File(m.sfDir).getName // "sf0.1"
+    // SELF-ADJUDICATING READINGS (round 15, VERDICT r14 ask #1).
     // tools/bench_bands.json carries per-row [lo, hi] noise bands
-    // harvested from every committed CANONICAL bench_full.json at this
-    // SF (tools/make_bands.py). When a headline reading exceeds 2× its
-    // band top — or, bandless, 2.5× the fastest the same row ran THIS
-    // session (warm-up included) — the row is re-measured up to twice
-    // in-session with a ~100 ms sustained micro-probe before and after
-    // each re-run; the reported value is the MEDIAN of all timed
-    // readings and the full {readings, probes, band} evidence rides in
-    // the artifact. A transient host spike thus displaces itself; a
-    // real regression survives three readings and says so with probe
-    // context attached — data, not narrative.
-    // -----------------------------------------------------------------
+    // harvested from the committed canonical bench_full.json artifacts at
+    // this SF (tools/make_bands.py). A headline median above 1.5× its
+    // band top — or, bandless, 2.5× the fastest the row ran this session
+    // (warm-up included) — is re-measured up to twice in-session with a
+    // micro-probe after each re-run; the reported value is the MEDIAN of
+    // all timed readings and the {readings, probes, band} evidence rides
+    // in the artifact. A transient host spike displaces itself; a real
+    // regression survives three readings and says so with probe context.
     val bands: Map[String, (Double, Double)] = {
-      val p = java.nio.file.Paths.get("tools/bench_bands.json")
-      if (!java.nio.file.Files.exists(p)) Map.empty
+      val p = Paths.get("tools/bench_bands.json")
+      if (!Files.exists(p)) Map.empty
       else try {
-        val txt = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        val txt = new String(Files.readAllBytes(p), "UTF-8")
         // {"sf":"sf0.1","bands":{"name":[lo,hi],...}} — flat, no deps
         val sfOk = s""""sf"\\s*:\\s*"([^"]+)"""".r.findFirstMatchIn(txt)
           .exists(_.group(1) == sfShort)
         if (!sfOk) Map.empty
         else """"([A-Za-z0-9_]+)"\s*:\s*\[\s*([0-9.eE+-]+)\s*,\s*([0-9.eE+-]+)\s*\]""".r
           .findAllMatchIn(txt)
-          .map(m => m.group(1) -> (m.group(2).toDouble, m.group(3).toDouble))
+          .map(g => g.group(1) -> (g.group(2).toDouble, g.group(3).toDouble))
           .toMap
       } catch { case e: Exception =>
-        System.err.println(s"[bench] bands unreadable (${e.getMessage}) — none applied")
+        m.log(s"bands unreadable (${e.getMessage}) — none applied")
         Map.empty
       }
     }
-    if (bands.nonEmpty)
-      System.err.println(s"[bench] loaded ${bands.size} noise bands for $sfShort")
-    // ~100-150 ms sustained compute burst (same kernel as the short
-    // calibration probe): cheap enough to interleave per re-measurement,
-    // long enough that sustained background load cannot hide between it
-    def microProbe(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0L, 200000000L, 1L, cpus.toInt)
-        .selectExpr("xxhash64(id) AS h")
-        .selectExpr("bit_xor(xxhash64(h)) AS s")
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    def medianOf(xs: Seq[Double]): Double = { val s = xs.sorted; s(s.size / 2) }
+    if (bands.nonEmpty) m.log(s"loaded ${bands.size} noise bands for $sfShort")
     // name -> (all timed readings, interleaved probes, band if any)
     val adjudicated = scala.collection.mutable.LinkedHashMap
       .empty[String, (Seq[Double], Seq[Double], Option[(Double, Double)])]
-    // (name, median-or-cold seconds, exchange count, cold?)
-    val results: Seq[(String, Double, Int, Boolean)] = selected.map { case (name, fn) =>
-      try {
-        var lastDf: org.apache.spark.sql.DataFrame = null
-        def runOnce(): Double = {
-          val t0 = System.nanoTime()
-          val df = fn(spark, sfDir)
-          df.write.format("noop").mode("overwrite").save()
-          lastDf = df
-          (System.nanoTime() - t0) / 1e9
-        }
-        def isolate(): Unit = {
-          // drop every frame the previous run persisted so the measurement
-          // includes the query's own cache builds and no query inherits
-          // (or evicts) another's storage. clearCache only covers the
-          // CacheManager; localCheckpoint blocks are freed by the
-          // ContextCleaner on GC — force one so they can't pile up into
-          // storage/GC pressure on later queries. The GC runs ONLY when
-          // persisted blocks actually exist (round 13): an unconditional
-          // full GC after every run of a 296-row suite was itself a
-          // measurable slice of the 851 s wall.
-          spark.catalog.clearCache()
-          if (spark.sparkContext.getPersistentRDDs.nonEmpty) System.gc()
-        }
-        val cold = tailRows.contains(name)
-        if (cold) {
-          // tail tier: one cold execution IS the measurement — these
-          // rows are fixed-cost-floor readings where cold ≈ warm; they
-          // are reported separately (queries_cold) and never compared
-          // against a warm number
-          val t = runOnce()
-          isolate()
-          System.err.println(f"[bench] $name%-24s cold=$t%8.3f (tail tier)")
-          (name, t, -1, true)
+    def walls(rs: Seq[Measure.Reading]) = rs.map(_.wall)
+    // (name, median-or-cold seconds, layer record of that run, cold?)
+    val results = selected.map { case (name, fn) =>
+      def once() = m.run(fn(m.spark, m.sfDir))
+      m.guard(name) {
+        if (tailRows(name)) {
+          // tail tier: one cold execution IS the measurement — never
+          // compared against a warm number
+          val r = once()
+          m.log(f"$name%-24s cold=${r.wall}%8.3f (tail tier)")
+          (name, r.wall, r.layers, true)
         } else {
-        val w = runOnce() // warm-up: JIT, codegen cache, FS metadata
-        isolate()
-        var readings = (1 to benchRuns).map { _ =>
-          val t = runOnce(); isolate(); t
-        }.toVector
-        // self-adjudication: out-of-band medians earn up to two extra
-        // in-session re-measurements with probes bracketing each one
-        val band = bands.get(name)
-        // banded trigger 1.5× top (round 16, VERDICT r15 ask #2 — was
-        // 2.0×): with band tops now capped at 1.5× the canonical median
-        // (make_bands.py), this adjudicates ~2.25× swings off the
-        // median; the r15 driver anomalies (curate_cluster_balance
-        // 2.5×, curate_dsir/dq_drift_ks ~1.8×) sat exactly in the
-        // 2.0×-top blind spot. Pure measurement hygiene: the reported
-        // value is still the median of ALL timed readings, evidence
-        // rides in `adjudications`.
-        val threshold = band match {
-          case Some((_, hi)) => 1.5 * hi
-          case None => 2.5 * math.min(w, readings.min)
-        }
-        if (medianOf(readings) > threshold) {
-          val probes = scala.collection.mutable.ArrayBuffer(microProbe())
-          var extra = 0
-          while (extra < 2 && medianOf(readings) > threshold) {
-            readings :+= runOnce(); isolate()
-            probes += microProbe()
-            extra += 1
+          val w = once().wall
+          var readings = Vector.fill(benchRuns)(once())
+          val band = bands.get(name)
+          val threshold = band match {
+            case Some((_, hi)) => 1.5 * hi
+            case None => 2.5 * math.min(w, walls(readings).min)
           }
-          adjudicated(name) = (readings, probes.toSeq, band)
-          System.err.println(f"[bench] $name%-24s OUT-OF-BAND: readings=" +
-            readings.map(x => f"$x%.3f").mkString("[", ",", "]") +
-            " probes=" + probes.map(x => f"$x%.3f").mkString("[", ",", "]") +
-            band.fold("")(b => f" band=[${b._1}%.3f,${b._2}%.3f]"))
+          if (Measure.median(walls(readings)) > threshold) {
+            val probes = scala.collection.mutable.ArrayBuffer(m.microProbe())
+            while (probes.size < 3 && Measure.median(walls(readings)) > threshold) {
+              readings :+= once()
+              probes += m.microProbe()
+            }
+            adjudicated(name) = (walls(readings), probes.toSeq, band)
+            m.log(f"$name%-24s OUT-OF-BAND: readings=" +
+              walls(readings).map(x => f"$x%.3f").mkString("[", ",", "]") +
+              " probes=" + probes.map(x => f"$x%.3f").mkString("[", ",", "]") +
+              band.fold("")(b => f" band=[${b._1}%.3f,${b._2}%.3f]"))
+          }
+          // the reported run's layer record rides on stderr too, so an
+          // args-selected iteration run shows it without bench_full.json
+          val r = readings.sortBy(_.wall).apply(readings.size / 2)
+          m.log(f"$name%-24s cold=$w%8.3f warm=${r.wall}%8.3f" + (if (benchRuns > 1)
+            walls(readings).sorted.map(x => f"$x%.3f").mkString(" (", ", ", ")") else "") +
+            " " + Measure.json(r.layers))
+          (name, r.wall, r.layers, false)
         }
-        val ts = readings.sorted
-        val t = ts(ts.size / 2)
-        // SHUFFLE-EXCHANGE count of the measured plan (outside the timed
-        // section — planning only, nothing executes). bench_compare.py
-        // uses it to pick the right phase probe per row: exchange-bearing
-        // rows normalize by calibration_shuffle, pure-compute rows by
-        // calibration_sustained — the mechanical form of the r10/r11
-        // "shuffle-path phase" adjudication. BroadcastExchange is not a
-        // shuffle and is excluded. -1 = plan string unavailable.
-        val exchanges = try {
-          val s = lastDf.queryExecution.executedPlan.toString
-          val all = "Exchange".r.findAllIn(s).size
-          val bcast = "BroadcastExchange".r.findAllIn(s).size
-          all - bcast
-        } catch { case _: Throwable => -1 }
-        System.err.println(
-          f"[bench] $name%-24s cold=$w%8.3f warm=$t%8.3f ex=$exchanges%2d" +
-            (if (benchRuns > 1) ts.map(x => f"$x%.3f").mkString(" (", ", ", ")") else ""))
-        (name, t, exchanges, false)
-        }
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        (name, -1.0, -1, false)
-      }
+      }.getOrElse((name, -1.0, ListMap.empty[String, Double], false))
     }
     // calibration rides in `queries` (the driver's per-round record) but
-    // stays OUT of `total` — totals remain engine-work-only and
-    // comparable across rounds. Tail-tier rows count toward `total`
-    // (they are real engine work) but live in queries_cold, never in
-    // `queries` — a cold reading must not be adjudicated against a warm
-    // one by the compare tool.
+    // stays OUT of `total`. Tail rows count toward `total` (real engine
+    // work) but live in queries_cold, never in `queries`. `value_warm`
+    // sums warm rows only (comparable across tiered and untiered rounds);
+    // value == value_warm + value_cold_tail always.
     val total = results.map(_._2).filter(_ >= 0).sum
     val warm = results.filter(r => !r._4)
     val coldRows = results.filter(r => r._4 && r._2 >= 0)
-    // PROTOCOL-SPLIT totals (round 14, ADVICE r13 low #4): a tiered run's
-    // `value` sums warm medians for headline rows with single cold
-    // readings for the tail, so it is not strictly comparable to an
-    // untiered (all-warm) round's `value` — cold readings carry
-    // JIT/codegen cost the warm protocol excludes. `value_warm` is the
-    // tier-stable total (warm rows only, comparable across tiered and
-    // untiered rounds over the shared row set); `value_cold_tail` is the
-    // cold tier's sum. value == value_warm + value_cold_tail always.
     val totalWarm = warm.map(_._2).filter(_ >= 0).sum
     val totalColdTail = coldRows.map(_._2).sum
-    val resultsOut = warm.map { case (k, v, _, _) => k -> v } :+
-      ("calibration" -> calibration) :+
-      ("calibration_sustained" -> calibrationSustained) :+
-      ("calibration_shuffle" -> calibrationShuffle)
-
-    // Full-precision per-query detail → bench_full.json (for BASELINE.md
-    // and the judge) — FULL runs only: an args-selected iteration run
-    // (single-query rechecks, probe subsets) must not clobber the
-    // committed canonical artifact (round 13 — it did, once).
-    // The stdout contract line must survive the driver's
-    // 2000-char output-tail buffer (BENCH_r01/r02 both arrived truncated
-    // → parsed:null), so it gets 3-decimal values and, if still too
-    // long, the CHEAPEST queries folded into an "other_sum"/"other_n"
-    // rollup — failures (-1) and expensive queries stay explicit.
+    val calibrations = Seq("calibration" -> calibration,
+      "calibration_sustained" -> calibrationSustained, "calibration_shuffle" -> calibrationShuffle)
+    // Full-precision per-query detail → bench_full.json, FULL runs only:
+    // an args-selected iteration run must not clobber the committed
+    // canonical artifact.
     if (args.isEmpty) {
-      val full = resultsOut.map { case (k, v) => "\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-      // record which streaming-harness mode produced these numbers
-      // (graft.bench.fast trims the replay harnesses' fixed cost;
-      // flag-on != flag-off totals are not raw-comparable) alongside the
-      // machine-phase calibration context — consumers must not have to
-      // guess either.
+      // graft.bench.fast trims the replay harnesses' fixed cost: flag-on
+      // and flag-off totals are not raw-comparable, so record which ran
       val streamFast = System.getProperty("graft.bench.fast", "0") == "1"
-      // queries_norm: per-row t / calibration_sustained (round-8 verdict
-      // ask #3) — the phase-normalized value two rounds can compare
-      // directly; tools/bench_compare.py consumes it (and re-derives it
-      // for older rounds that lack the field).
-      val norm = warm.map { case (k, v, _, _) =>
-        "\"" + k + "\":" + (if (v < 0) v else v / calibrationSustained)
-      }.mkString("{", ",", "}")
-      // queries_exchanges: per-row shuffle-exchange count of the measured
-      // plan — bench_compare.py's per-row probe selector (see above)
-      val exch = warm.map { case (k, _, e, _) => "\"" + k + "\":" + e }
-        .mkString("{", ",", "}")
-      // queries_cold: the tail tier's single cold readings — full
-      // visibility for the judge, excluded from warm-vs-warm compares
-      val coldJson = coldRows.map { case (k, v, _, _) => "\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-      val tiered = coldRows.nonEmpty
-      // full-precision adjudication evidence (see the stdout line's
-      // 3-decimal twin below)
-      val adjFull = adjudicated.map { case (k, (rs, ps, b)) =>
-        "\"" + k + "\":{\"readings\":" + rs.mkString("[", ",", "]") +
-          ",\"probes\":" + ps.mkString("[", ",", "]") +
-          b.fold("")(x => ",\"band\":[" + x._1 + "," + x._2 + "]") + "}"
-      }.mkString("{", ",", "}")
-      java.nio.file.Files.write(java.nio.file.Paths.get("bench_full.json"),
-        s"""{"metric":"total","value":$total,"value_warm":$totalWarm,"value_cold_tail":$totalColdTail,"unit":"sec","stream_fast":$streamFast,"runs":$benchRuns,"tiered":$tiered,"n_bands":${bands.size},"calibration":$calibration,"calibration_sustained":$calibrationSustained,"calibration_shuffle":$calibrationShuffle,"queries":$full,"queries_cold":$coldJson,"queries_norm":$norm,"queries_exchanges":$exch,"adjudications":$adjFull,"sf":"$sfDir"}"""
+      val full = Measure.json(warm.map(r => r._1 -> r._2) ++ calibrations)
+      // queries_norm: per-row t / calibration_sustained, the
+      // phase-normalized value tools/bench_compare.py compares
+      val norm = Measure.json(warm.map { case (k, v, _, _) =>
+        k -> (if (v < 0) v else v / calibrationSustained) })
+      // queries_exchanges: shuffle exchanges of the measured write's
+      // final plan — bench_compare.py normalizes exchange-bearing rows by
+      // calibration_shuffle, pure-compute rows by calibration_sustained
+      val exch = Measure.json(warm.map { case (k, _, l, _) =>
+        k -> l.getOrElse("plan.exchanges", -1.0).toInt })
+      val coldJson = Measure.json(coldRows.map(r => r._1 -> r._2))
+      // queries_layers: each reported run split by layer (README
+      // §Measurement lists the fields)
+      val layers = Measure.json(results.filter(_._3.nonEmpty).map(r => r._1 -> Measure.json(r._3)))
+      val adjFull = Measure.json(adjudicated.toSeq.map { case (k, (rs, ps, b)) =>
+        k -> (s"""{"readings":${rs.mkString("[", ",", "]")},"probes":${ps.mkString("[", ",", "]")}""" +
+          b.fold("")(x => s""","band":[${x._1},${x._2}]""") + "}") })
+      Files.write(Paths.get("bench_full.json"),
+        s"""{"metric":"total","value":$total,"value_warm":$totalWarm,"value_cold_tail":$totalColdTail,"unit":"sec","stream_fast":$streamFast,"runs":$benchRuns,"tiered":${coldRows.nonEmpty},"n_bands":${bands.size},"calibration":$calibration,"calibration_sustained":$calibrationSustained,"calibration_shuffle":$calibrationShuffle,"queries":$full,"queries_cold":$coldJson,"queries_norm":$norm,"queries_exchanges":$exch,"queries_layers":$layers,"adjudications":$adjFull,"sf":"${m.sfDir}"}"""
           .getBytes("UTF-8"))
     }
-    def fmt(v: Double): String =
-      BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-    // per-row adjudication evidence: {"row":{"readings":[...],"probes":
-    // [...],"band":[lo,hi]}} — readings are ALL timed runs (median is
-    // what `queries` reports), probes the interleaved ~100 ms sustained
-    // bursts, band absent for bandless rows. Empty on clean runs.
-    val adjJson: String = adjudicated.map { case (k, (rs, ps, b)) =>
-      "\"" + k + "\":{\"readings\":" + rs.map(fmt).mkString("[", ",", "]") +
-        ",\"probes\":" + ps.map(fmt).mkString("[", ",", "]") +
-        b.fold("")(x => ",\"band\":[" + fmt(x._1) + "," + fmt(x._2) + "]") + "}"
-    }.mkString("{", ",", "}")
-    // the tail tier's cold readings fold straight into other_sum — the
-    // same bucket the r12 line already used for these rows
-    val coldSum = coldRows.map(_._2).sum
-    def line(folded: Set[String]): String = {
-      val kept = resultsOut.filter { case (k, v) => v < 0 || !folded(k) }
-        .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-      val extra = if (folded.isEmpty && coldRows.isEmpty) Nil else {
-        val fs = resultsOut.filter { case (k, v) => v >= 0 && folded(k) }
-        List("\"other_sum\":" + fmt(fs.map(_._2).sum + coldSum),
-          "\"other_n\":" + (fs.size + coldRows.size))
-      }
-      val qs = (kept ++ extra).mkString("{", ",", "}")
-      // adjudication evidence travels in the DRIVER-RECORDED line too
-      // (BENCH_r{N}.json is parsed from stdout): out-of-band rows carry
-      // their full readings/probes/band so a driver-host outlier is
-      // self-documenting — n_bands says how many bands were armed
-      val adj = if (adjudicated.isEmpty) "" else s""","adjudications":$adjJson"""
-      s"""{"metric":"total","value":${fmt(total)},"value_warm":${fmt(totalWarm)},"value_cold_tail":${fmt(totalColdTail)},"unit":"sec","n_bands":${bands.size}$adj,"queries":$qs,"sf":"$sfShort"}"""
-    }
-    val budget = 1900 // tail buffer 2000 minus sbt's trailing [success] line
-    // calibration is never folded — it must stay explicit in every round's line
-    val cheapestFirst = warm.filter(_._2 >= 0).sortBy(_._2).map(_._1)
-    // Sub-0.3 s rows are harness-floor measurements at 250+ queries
-    // (~0.8 s/row average is mostly fixed cost): ALWAYS folded into
-    // other_sum (round-10 verdict ask #8) so the headline stays an
-    // engine-work read-out; they are a prefix of cheapestFirst. Full
-    // per-query detail still lands in bench_full.json; the correctness
-    // gate is unaffected.
-    var nFold = warm.count { case (_, v, _, _) => v >= 0 && v < 0.3 }
-    var out = line(cheapestFirst.take(nFold).toSet)
-    while (out.length > budget && nFold < cheapestFirst.size) {
-      nFold = math.min(nFold + 5, cheapestFirst.size)
-      out = line(cheapestFirst.take(nFold).toSet)
-    }
-    println(out)
-    spark.stop()
+    import Measure.fmt3
+    println(Measure.fitLine(
+      s"""{"metric":"total","value":${fmt3(total)},"value_warm":${fmt3(totalWarm)},"value_cold_tail":${fmt3(totalColdTail)},"unit":"sec","n_bands":${bands.size}""",
+      warm.map(r => r._1 -> r._2), calibrations, coldRows.map(_._2),
+      adjudicated.toSeq.map { case (k, (rs, _, _)) => k -> rs }, s""","sf":"$sfShort"}"""))
+    m.spark.stop()
   }
 }

@@ -26,9 +26,10 @@ import org.apache.spark.sql.functions._
   * The baseline closures below use ONLY `org.apache.spark.sql.functions`
   * and `spark.read.parquet` — no graft operators, kernels, or Tables
   * schemas — i.e. what a competent user writes against stock Spark.
-  * Methodology matches graft.Bench: noop-sink write, JIT preamble, warm
-  * run untimed, cache cleared + GC between timed runs, fixed-work
-  * calibration probe for cross-round normalization.
+  * Methodology is graft.Bench's, on the shared graft.Measure core:
+  * noop-sink write, JIT preamble, warm run untimed, isolation between
+  * timed runs, fixed-work calibration probe for cross-round
+  * normalization.
   *
   * Run: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=4 \
   *        sbt "runMain graft.MatchedBench"
@@ -292,64 +293,11 @@ object MatchedBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Engine.configure(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-matched-bench"),
-      cpus.toInt
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // JIT preamble — identical to graft.Bench
-    locally {
-      val li = Tables.lineitem(spark, sfDir)
-      val o = Tables.orders(spark, sfDir)
-      for (_ <- 1 to 2) {
-        li.filter(col("l_quantity") > 0)
-          .groupBy("l_returnflag").agg(sum("l_quantity"), approx_count_distinct("l_partkey"))
-          .orderBy("l_returnflag")
-          .write.format("noop").mode("overwrite").save()
-        li.join(o, col("l_orderkey") === col("o_orderkey"))
-          .select(col("o_custkey"),
-            row_number().over(Window.partitionBy("o_custkey").orderBy("l_orderkey")).as("rk"))
-          .filter(col("rk") <= 2)
-          .write.format("noop").mode("overwrite").save()
-      }
-      spark.catalog.clearCache()
-    }
-
-    val calibration: Double = {
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        spark.range(0L, 200000000L, 1L, cpus.toInt)
-          .selectExpr("xxhash64(id) AS h")
-          .selectExpr("bit_xor(xxhash64(h)) AS s")
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      once()
-      val ts = Seq(once(), once(), once()).sorted
-      System.err.println(f"[matched] calibration median=${ts(1)}%8.3f")
-      ts(1)
-    }
-
-    def isolate(): Unit = { spark.catalog.clearCache(); System.gc() }
-    // the clock wraps CONSTRUCTION + write: iterative forms (pagerank,
-    // both naive and engine) do real work — eager checkpoints, a node
-    // count — while the DataFrame is being built, and that work must not
-    // escape the timer on either side. For lazy one-shot queries the
-    // construction cost is plan building, sub-millisecond.
-    def timeNoop(mk: () => DataFrame): Double = {
-      val t0 = System.nanoTime()
-      mk().write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-
-    val engineQ = SparkEntry.queries
-    var baseTotal = 0.0
-    var engTotal = 0.0
-    val rows = baselines(spark, sfDir).map { case (rowName, engName, base) =>
-      val eng = () => engineQ(engName)(spark, sfDir)
+    val m = new Measure("matched", defaultCpus = "4", defaultSf = "/root/testdata/sf0.1")
+    m.warmJit()
+    val calibration = m.calibration()
+    val rows = baselines(m.spark, m.sfDir).map { case (rowName, engName, base) =>
+      val eng = () => SparkEntry.queries(engName)(m.spark, m.sfDir)
       // contract check: both sides carry a total ORDER BY, so plain
       // row-list equality. Collected once, untimed.
       val bRows = base().collect().toSeq
@@ -358,35 +306,31 @@ object MatchedBench {
         s"$rowName: baseline and engine outputs differ " +
           s"(${bRows.size} vs ${eRows.size} rows; first diff: " +
           s"${bRows.zip(eRows).find { case (a, b) => a != b }.orNull})")
-      isolate()
+      m.isolate()
       // warm both plans (JIT + codegen cache), then time INTERLEAVED
       // medians of 3 — a single timed run put one row's ratio anywhere
       // in ±2× on host wobble (round 9 observed json_extract at 2.29×
       // once, 0.94-1.03× on every re-measure); interleaving keeps phase
       // drift off one side of the ratio, the median kills spikes
-      base().write.format("noop").mode("overwrite").save(); isolate()
-      eng().write.format("noop").mode("overwrite").save(); isolate()
-      val bts = collection.mutable.Buffer[Double]()
-      val ets = collection.mutable.Buffer[Double]()
-      for (_ <- 1 to 3) {
-        bts += timeNoop(base); isolate()
-        ets += timeNoop(eng); isolate()
-      }
-      val bt = bts.sorted.apply(1)
-      val et = ets.sorted.apply(1)
-      baseTotal += bt; engTotal += et
-      System.err.println(f"[matched] $rowName%-18s base=$bt%7.3f engine=$et%7.3f ratio=${et / bt}%5.2fx")
+      val (bt, et) = m.guard(rowName) {
+        m.run(base()); m.run(eng())
+        val (bts, ets) = Seq.fill(3)((m.run(base()).wall, m.run(eng()).wall)).unzip
+        (Measure.median(bts), Measure.median(ets))
+      }.getOrElse((-1.0, -1.0))
+      m.log(f"$rowName%-18s base=$bt%7.3f engine=$et%7.3f ratio=${et / bt}%5.2fx")
       (rowName, bt, et)
     }
-
+    // a failed row (−1) stays in `queries` and out of both totals
+    val ok = rows.filter(r => r._2 >= 0 && r._3 >= 0)
+    val (baseTotal, engTotal) = (ok.map(_._2).sum, ok.map(_._3).sum)
     val json = rows.map { case (n, b, e) =>
       f""""$n":{"baseline":$b%.3f,"engine":$e%.3f}"""
     }.mkString("{", ",", "}")
     val out =
-      f"""{"metric":"matched_ratio","value":${engTotal / baseTotal}%.3f,"baseline_total":$baseTotal%.3f,"engine_total":$engTotal%.3f,"calibration":$calibration%.3f,"queries":$json,"sf":"$sfDir"}"""
+      f"""{"metric":"matched_ratio","value":${engTotal / baseTotal}%.3f,"baseline_total":$baseTotal%.3f,"engine_total":$engTotal%.3f,"calibration":$calibration%.3f,"queries":$json,"sf":"${m.sfDir}"}"""
     java.nio.file.Files.write(java.nio.file.Paths.get("matched_bench.json"),
       out.getBytes("UTF-8"))
     println(out)
-    spark.stop()
+    m.spark.stop()
   }
 }

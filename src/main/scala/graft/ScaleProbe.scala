@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Scaling-curve probe (SCALE.md evidence): run a headline query subset
   * at ALL THREE fixture scale factors in one JVM and report the time
@@ -11,9 +10,10 @@ import org.apache.spark.sql.SparkSession
   * input is a scale bug; one whose time barely moves is floor-bound and
   * will amortize on a cluster.
   *
-  * Methodology matches Bench: noop-sink write (full rows), one warm run,
-  * then median of three timed runs (the iterative rows wobble ±25%),
-  * cache + GC isolation between runs. Writes `scale_curve.json`.
+  * Methodology is Bench's, on the shared graft.Measure core: noop-sink
+  * write (full rows), one warm run, then median of three timed runs (the
+  * iterative rows wobble ±25%), isolation between runs. Writes
+  * `scale_curve.json`.
   *
   * Args: optional query names (default: the headline set below).
   */
@@ -87,56 +87,25 @@ object ScaleProbe {
     "dedup_semantic_lsh_loose")
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val m = new Measure("scale", defaultCpus = "32", defaultSf = "/root/testdata/sf0.1")
     // fourth point: the SynthScale ×10 slice (≈ sf1), when generated —
     // extends the measured span to 1000× on the relational tables
     val synth = sys.env.getOrElse("SPARK_GRAFT_SYNTH_DIR", "target/synth-sf1")
     val sfDirs = Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
       "/root/testdata/sf0.1") ++
       (if (new java.io.File(synth).isDirectory) Seq(synth) else Nil)
-    def freshSession(): org.apache.spark.sql.SparkSession = {
-      val s = Engine.configure(
-        SparkSession.builder().master(s"local[$cpus]").appName("graft-scale"),
-        cpus.toInt
-      ).getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
-    var spark = freshSession()
     val names = if (args.nonEmpty) args.toSeq
       else headline.filter(SparkEntry.queries.contains)
-    def isolate(): Unit = { spark.catalog.clearCache(); System.gc() }
-    // per query per SF: warm once, median of three
+    // per query per SF: warm once (JIT, codegen, footer caches), median of three
     val rows = for (name <- names) yield {
       val fn = SparkEntry.queries(name)
-      val perSf = for (dir <- sfDirs) yield {
-        def once(): Double = {
-          val t0 = System.nanoTime()
-          fn(spark, dir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        try {
-          once(); isolate() // warm: JIT, codegen, footer caches
-          val ts = Seq.fill(3) { val t = once(); isolate(); t }.sorted
-          ts(1) // median
-        } catch { case e: Throwable =>
-          System.err.println(s"[scale] $name @ $dir failed: ${e.getMessage}")
-          // An executor OOM in local mode kills the shared context; left
-          // as-is it poisons EVERY later row with bogus -1s (observed
-          // round 9: one 48 GiB-hungry demonstrator cell zeroed the
-          // three queries after it). Recreate the session so one row's
-          // death stays one row's death.
-          if (spark.sparkContext.isStopped) {
-            System.err.println(s"[scale] context died — recreating session")
-            SparkSession.clearActiveSession()
-            SparkSession.clearDefaultSession()
-            spark = freshSession()
-          }
-          -1.0
-        }
+      val perSf = sfDirs.map { dir =>
+        m.guard(s"$name @ $dir") {
+          m.run(fn(m.spark, dir))
+          Measure.median(Seq.fill(3)(m.run(fn(m.spark, dir)).wall))
+        }.getOrElse(-1.0)
       }
-      System.err.println(f"[scale] $name%-20s " +
-        perSf.map(t => f"$t%7.3f").mkString(" "))
+      m.log(f"$name%-20s " + perSf.map(t => f"$t%7.3f").mkString(" "))
       name -> perSf
     }
     // Locale.ROOT: the f-interpolator is locale-dependent and a
@@ -163,7 +132,7 @@ object ScaleProbe {
             s"(runMain graft.tools.SynthScale) or run with no args to " +
             s"rebuild the full curve on the new axis")
         "\"([A-Za-z0-9_]+)\":(\\[[-0-9.,]+\\])".r.findAllMatchIn(txt)
-          .map(m => m.group(1) -> m.group(2)).toSeq
+          .map(g => g.group(1) -> g.group(2)).toSeq
       } else Seq.empty
     val fresh = rows.map { case (n, ts) =>
       n -> ("[" + ts.map(d3).mkString(",") + "]")
@@ -176,6 +145,6 @@ object ScaleProbe {
       s"""{"sfs":[$sfNames],"median_of_3_sec":$json}"""
         .getBytes("UTF-8"))
     println(s"""{"metric":"scale_curve","queries":${merged.size}}""")
-    spark.stop()
+    m.spark.stop()
   }
 }

@@ -4,6 +4,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ListenerBridge
 import graft.functions.TextOps
 import graft.operators.Observed
 
@@ -23,10 +24,9 @@ class ObservedSpec extends SparkTestBase {
     spark.sparkContext.addSparkListener(listener)
     try {
       observed.write.format("noop").mode("overwrite").save() // ONE action
-      // listener events are async; give the bus a moment to drain
-      val deadline = System.nanoTime() + 5_000_000_000L
-      while (jobs.get() == 0 && System.nanoTime() < deadline) Thread.sleep(20)
-      Thread.sleep(200) // would catch a spurious SECOND job
+      // listener events are async: wait until the bus has delivered every
+      // event the action posted, so a spurious SECOND job would be counted
+      ListenerBridge.drain(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(listener)
 
     // the metrics arrived without any additional job beyond the write
